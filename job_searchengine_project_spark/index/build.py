@@ -7,18 +7,24 @@ the reference's six daemons, SURVEY.md §3.2):
       -> prepare_docs           (Arrow UDF tokenize; tf computed in-UDF
                                  = map-side partial aggregation)
       -> write docstore+forward (stage "docs", resumable checkpoint)
-      -> explode to postings    (term, doc_id, tf, doclen)
-      -> df-per-term agg        (map-side combined; head-term detection)
-      -> salt assignment        explicit skew split: head terms with
-                                df > target get n_salts doc-RANGE
-                                partitions (salt = doc_id // range) so
-                                partial segments are doc-disjoint
-      -> repartition(term,salt) -> applyInPandas encode (numpy codec)
+      -> head-term df sample    (the only explode: a doc sample's terms;
+                                 head terms get n_salts doc-RANGE
+                                 salts, salt = doc_id // range, so
+                                 partial segments are doc-disjoint)
+      -> pack                   mapInArrow over the forward rows' nested
+                                terms: salt + term_bucket assigned at
+                                vocabulary cost, one row per (term,
+                                salt) carrying doc/tf/tf-norm (and
+                                position) blobs — no per-posting row
+      -> repartition(term,salt) -> mapInArrow encode (numpy codec)
       -> groupBy(term)          merge partials by blob CONCATENATION
                                 (only compressed bytes shuffle here —
                                 the whole point of salting first)
       -> write segments parquet partitioned by term_bucket
          (+ stats, + per-partition lineage metrics)
+
+update_index and build_sharded_segments run the same head-map / pack /
+encode helpers (_estimate_head_map, _pack_postings, _encode_packed).
 
 Skew rationale: Zipfian head terms would otherwise send >20% of all
 posting rows through single reducers (north_rule: skew handled
@@ -130,85 +136,57 @@ _PARTIAL_COLS = [
     "block_last_doc", "block_doc_bytes", "block_tf_bytes",
     "block_max_tfnorm", "n_parts", "bytes_written",
 ]
-_PARTIAL_COLS_POS = _PARTIAL_COLS + ["pos_blob", "block_pos_bytes"]
+
+# packed (term, salt) rows: each blob column is one fixed-width data
+# buffer + per-group offsets (_binary_from_fixed). A positional index
+# adds the int32 positions of the group's postings back to back in
+# posting order — posting i owns tf_i of them, so the per-posting
+# offsets are the running sum of the tfs blob
+_PACK_SCHEMA = (
+    "term string, salt int, term_bucket int, "
+    "docs_blob binary, tfs_blob binary, tfn_blob binary"
+)
+_PACK_SCHEMA_POS = _PACK_SCHEMA + ", positions_blob binary"
 
 
-def _pack_partition_arrow(batches, avgdl: float):
-    """Map-side pack kernel (r6, guide §2.3/§8: shuffle metadata-light
-    proxies, never per-posting rows): group THIS input partition's
-    postings by (term, salt) and emit one row per group carrying the
-    doc ids / tfs / precomputed tf-norms as raw binary blobs (~20 B
-    per posting in a handful of rows per term) — the encode shuffle
-    previously moved one 5-field row PER POSTING, and the per-row
-    serialization overhead of that exchange, not the encode kernel,
-    dominated the whole segments stage. tfn here is the identical
-    numpy expression the encode kernel evaluated, just computed before
-    the exchange instead of after it."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    parts = list(batches)
-    if not parts:
-        return
-    tbl = pa.Table.from_batches(parts)
-    if tbl.num_rows == 0:
-        return
-    dict_arr = pc.dictionary_encode(tbl.column("term").combine_chunks())
-    tc = dict_arr.indices.to_numpy()
-    terms_uniq = dict_arr.dictionary.to_pylist()
-    salts = tbl.column("salt").to_numpy()
-    docs = tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
-    tfs = tbl.column("tf").to_numpy().astype(np.int64, copy=False)
-    dls = tbl.column("doclen").to_numpy().astype(np.float64)
-    tfn = tfs / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * (dls / avgdl)))
-    order = np.lexsort((docs, salts, tc))
-    tc, sa, docs, tfs, tfn = tc[order], salts[order], docs[order], tfs[order], tfn[order]
+def _sort_groups(codes, salts, docs):
+    """(order, group starts) of postings lexsorted by (term code, salt,
+    doc) — the (term, salt) groups both packed kernels cut on."""
+    order = np.lexsort((docs, salts, codes))
+    tc, sa = codes[order], salts[order]
     change = np.empty(tc.size, dtype=bool)
     change[0] = True
     change[1:] = (tc[1:] != tc[:-1]) | (sa[1:] != sa[:-1])
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], tc.size)
-    terms_out, salts_out, d_blobs, t_blobs, n_blobs = [], [], [], [], []
-    for s, e in zip(starts, ends):
-        terms_out.append(terms_uniq[tc[s]])
-        salts_out.append(int(sa[s]))
-        d_blobs.append(docs[s:e].tobytes())
-        t_blobs.append(tfs[s:e].astype(np.int32).tobytes())
-        n_blobs.append(tfn[s:e].tobytes())
-    yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(terms_out, type=pa.string()),
-            pa.array(salts_out, type=pa.int32()),
-            pa.array(d_blobs, type=pa.binary()),
-            pa.array(t_blobs, type=pa.binary()),
-            pa.array(n_blobs, type=pa.binary()),
-        ],
-        ["term", "salt", "docs_blob", "tfs_blob", "tfn_blob"],
-    )
+    return order, np.flatnonzero(change)
 
 
-_PACKED_SCHEMA = (
-    "term string, salt int, docs_blob binary, tfs_blob binary, tfn_blob binary"
-)
-
-_PACKED_SCHEMA_B = "term string, salt int, term_bucket int, " \
-    "docs_blob binary, tfs_blob binary, tfn_blob binary"
+def _ragged_take(values, counts, order):
+    """Gather the back-to-back runs of ``values`` (run i holds
+    counts[i] elements) in run ``order`` with ONE vectorized index —
+    no per-run Python. Returns (values, run offsets of the result)."""
+    src = np.zeros(counts.size + 1, dtype=np.int64)
+    np.cumsum(counts, out=src[1:])
+    c = counts[order]
+    off = np.zeros(c.size + 1, dtype=np.int64)
+    np.cumsum(c, out=off[1:])
+    idx = np.arange(off[-1], dtype=np.int64) + np.repeat(src[:-1][order] - off[:-1], c)
+    return values[idx], off
 
 
 def _pack_forward_arrow(batches, avgdl: float, n_docs: int, head_map: dict,
-                        term_buckets: int, shard_rng: int | None = None):
-    """Pack kernel fed DIRECTLY by the forward table's nested rows
-    (r6): the old pipeline exploded ~40 posting rows per doc JVM-side
-    and then converted every one of them through the Arrow boundary
-    into the pack/encode kernels — row-at-a-time ArrowWriter
-    conversion of the exploded rows, not the shuffle itself, dominated
-    the segments stage. Reading the forward rows moves the same leaf
-    values as columnar array regions (no per-posting row exists
-    anywhere), and the salt assignment — identical arithmetic to the
-    broadcast head join (ceil and trunc agree exactly for int inputs
-    < 2^31) — plus the term_bucket derivation run at VOCABULARY cost
-    in-kernel. Emitted groups are byte-identical to the exploded
-    form's (test-gated)."""
+                        term_buckets: int, shard_rng: int | None = None,
+                        doc_base: int = 0):
+    """Pack kernel fed DIRECTLY by the forward table's nested rows: the
+    leaf values move as columnar array regions (no per-posting row
+    exists anywhere) and come out as one row per (term, salt) group
+    carrying the doc ids / tfs / precomputed tf-norms (and positions)
+    as binary blobs. The salt assignment runs at VOCABULARY cost
+    in-kernel: head terms (``head_map``: term -> n_salts) split into
+    doc-RANGE salts ``(doc_id - doc_base) // ceil(n_docs / n_salts)``
+    — ceil and trunc agree exactly with the JVM's double division for
+    int inputs < 2^31 — and ``shard_rng`` instead splits every term by
+    the same range (salt == shard). ``doc_base`` lets an update salt
+    relative to its own generation."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -220,6 +198,8 @@ def _pack_forward_arrow(batches, avgdl: float, n_docs: int, head_map: dict,
         terms_col = batch.column("terms")
         counts = pc.list_value_length(terms_col).to_numpy().astype(np.int64)
         flat = pc.list_flatten(terms_col)
+        if len(flat) == 0:
+            continue
         tfs_all = flat.field("tf").to_numpy().astype(np.int64)
         d = pc.dictionary_encode(flat.field("term"))
         codes = d.indices.to_numpy().astype(np.int64)
@@ -236,46 +216,43 @@ def _pack_forward_arrow(batches, avgdl: float, n_docs: int, head_map: dict,
         docs_rep = np.repeat(doc_ids, counts)
         dls_rep = np.repeat(dls, counts)
         if shard_rng is not None:
-            # sharded-layout derivation: every term splits by the SAME
-            # doc range (salt == shard), identical to the old
-            # (doc_id / rng) cast-int column
-            salts = (docs_rep // shard_rng).astype(np.int64)
+            salts = docs_rep // shard_rng
         else:
             salts = np.where(
-                ns_vocab[codes] == 1, 0, docs_rep // rps_vocab[codes]
+                ns_vocab[codes] == 1, 0, (docs_rep - doc_base) // rps_vocab[codes]
             ).astype(np.int64)
         tfn = tfs_all / (
             tfs_all + BM25_K1 * (1.0 - BM25_B + BM25_B * (dls_rep / avgdl))
         )
-        if codes.size == 0:
-            continue
-        order = np.lexsort((docs_rep, salts, codes))
-        tc, sa = codes[order], salts[order]
-        docs_s, tfs_s, tfn_s = docs_rep[order], tfs_all[order], tfn[order]
-        change = np.empty(tc.size, dtype=bool)
-        change[0] = True
-        change[1:] = (tc[1:] != tc[:-1]) | (sa[1:] != sa[:-1])
-        starts = np.flatnonzero(change)
+        order, starts = _sort_groups(codes, salts, docs_rep)
+        tc = codes[order]
         bounds = np.append(starts, tc.size).astype(np.int64)
-        # blob columns built from ONE data buffer + an offsets array
-        # (a binary Arrow column IS offsets + contiguous bytes): no
-        # per-group Python bytes objects — with a wide vocabulary the
-        # group count approaches the posting count and a per-group
-        # .tobytes() loop would dominate the kernel (guide §4.2).
-        terms_arr = pc.take(d.dictionary, pa.array(tc[starts]))
-        yield pa.RecordBatch.from_arrays(
-            [
-                terms_arr.cast(pa.string()),
-                pa.array(sa[starts].astype(np.int32), type=pa.int32()),
-                pa.array(
-                    tb_vocab[tc[starts]].astype(np.int32), type=pa.int32()
-                ),
-                _binary_from_fixed(docs_s, bounds, 8),
-                _binary_from_fixed(tfs_s.astype(np.int32), bounds, 4),
-                _binary_from_fixed(tfn_s, bounds, 8),
-            ],
-            ["term", "salt", "term_bucket", "docs_blob", "tfs_blob", "tfn_blob"],
-        )
+        # blob columns built from ONE data buffer + an offsets array:
+        # no per-group Python bytes objects — with a wide vocabulary
+        # the group count approaches the posting count
+        arrays = [
+            pc.take(d.dictionary, pa.array(tc[starts])).cast(pa.string()),
+            pa.array(salts[order][starts].astype(np.int32), type=pa.int32()),
+            pa.array(tb_vocab[tc[starts]].astype(np.int32), type=pa.int32()),
+            _binary_from_fixed(docs_rep[order], bounds, 8),
+            _binary_from_fixed(tfs_all[order].astype(np.int32), bounds, 4),
+            _binary_from_fixed(tfn[order], bounds, 8),
+        ]
+        names = ["term", "salt", "term_bucket", "docs_blob", "tfs_blob", "tfn_blob"]
+        if flat.type.get_field_index("pos") >= 0:
+            pos_lists = flat.field("pos")
+            # the encode kernel finds each posting's positions by its tf
+            if not np.array_equal(
+                pc.list_value_length(pos_lists).to_numpy(), tfs_all
+            ):
+                raise ValueError("forward positions must hold tf values per posting")
+            pos, p_off = _ragged_take(
+                pc.list_flatten(pos_lists).to_numpy().astype(np.int32, copy=False),
+                tfs_all, order,
+            )
+            arrays.append(_binary_from_fixed(pos, p_off[bounds], 4))
+            names.append("positions_blob")
+        yield pa.RecordBatch.from_arrays(arrays, names)
 
 
 def _fixed_from_binary(arr, dtype, width: int):
@@ -300,9 +277,16 @@ def _fixed_from_binary(arr, dtype, width: int):
 def _binary_from_fixed(values: "np.ndarray", bounds: "np.ndarray", width: int):
     """Arrow binary array over a fixed-width numpy array: one data
     buffer (the array's own bytes) + int32 offsets at element
-    granularity x width. bounds = group starts + final end."""
+    granularity x width. bounds = group starts + final end. A batch
+    whose data would pass 2 GiB fails loudly — the int32 offsets
+    would wrap and corrupt every later group."""
     import pyarrow as pa
 
+    if len(bounds) and int(bounds[-1]) * width >= 2**31:
+        raise ValueError(
+            f"packed blob batch of {int(bounds[-1]) * width} bytes exceeds "
+            "the 2 GiB int32-offset limit of an Arrow binary array"
+        )
     data = values.tobytes()
     offsets = (bounds * width).astype(np.int32)
     return pa.Array.from_buffers(
@@ -313,10 +297,9 @@ def _binary_from_fixed(values: "np.ndarray", bounds: "np.ndarray", width: int):
 
 def _encode_packed_arrow(batches, block_size: int):
     """Encode kernel over PACKED (term, salt) blob rows: unpack the
-    binary arrays, flatten, lexsort — identical (term, salt, doc)
-    multiset and order as the per-posting form, so the emitted partial
-    rows are byte-identical — then the same vectorized grouped codec
-    pass."""
+    binary arrays, flatten, lexsort (positions follow their postings
+    by a ragged gather), then one vectorized grouped codec pass — or,
+    for a positional index, one encode_postings call per group."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -345,193 +328,126 @@ def _encode_packed_arrow(batches, block_size: int):
     )
     terms_codes = np.repeat(row_tc, counts)
     salts = np.repeat(row_salts, counts)
-
-    order = np.lexsort((docs, salts, terms_codes))
-    tc, sa, docs, tfs, tfn = (
-        terms_codes[order], salts[order], docs[order], tfs[order], tfn[order]
-    )
-    change = np.empty(tc.size, dtype=bool)
-    change[0] = True
-    change[1:] = (tc[1:] != tc[:-1]) | (sa[1:] != sa[:-1])
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], tc.size)
-    encs = codec.encode_postings_grouped(
-        starts, ends, docs, tfs, tfn, block_size=block_size
-    )
-    yield from _emit_partial_batch(starts, encs, tc, sa, terms_uniq)
-
-
-def _emit_partial_batch(starts, encs, tc, sa, terms_uniq):
-    import pyarrow as pa
-
-    cols: dict[str, list] = {c: [] for c in _PARTIAL_COLS}
-    for s, enc in zip(starts, encs):
-        cols["term"].append(terms_uniq[tc[s]])
-        cols["salt"].append(int(sa[s]))
-        cols["df"].append(enc.count)
-        cols["first_doc"].append(enc.first_doc)
-        cols["doc_blob"].append(enc.doc_blob)
-        cols["tf_blob"].append(enc.tf_blob)
-        cols["block_n"].append(enc.block_n)
-        cols["block_last_doc"].append(enc.block_last_doc)
-        cols["block_doc_bytes"].append(enc.block_doc_bytes)
-        cols["block_tf_bytes"].append(enc.block_tf_bytes)
-        cols["block_max_tfnorm"].append(enc.block_max_tfnorm)
-        cols["n_parts"].append(1)
-        cols["bytes_written"].append(len(enc.doc_blob) + len(enc.tf_blob))
-    yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(cols["term"], type=pa.string()),
-            pa.array(cols["salt"], type=pa.int32()),
-            pa.array(cols["df"], type=pa.int64()),
-            pa.array(cols["first_doc"], type=pa.int64()),
-            pa.array(cols["doc_blob"], type=pa.binary()),
-            pa.array(cols["tf_blob"], type=pa.binary()),
-            pa.array(cols["block_n"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_last_doc"], type=pa.list_(pa.int64())),
-            pa.array(cols["block_doc_bytes"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_tf_bytes"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_max_tfnorm"], type=pa.list_(pa.float64())),
-            pa.array(cols["n_parts"], type=pa.int32()),
-            pa.array(cols["bytes_written"], type=pa.int64()),
-        ],
-        _PARTIAL_COLS,
-    )
-
-
-def _encode_partition_arrow(batches, avgdl: float, block_size: int):
-    """mapInArrow kernel (non-positional): encode every (term, salt)
-    group in the partition. The posting columns go straight from the
-    Arrow batches to numpy (no pandas materialization of the widest
-    shuffle in the build) and the term column dictionary-encodes in C;
-    group encoding is the vectorized whole-partition codec pass."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    parts = list(batches)
-    if not parts:  # empty shuffle partition (partitions > groups)
-        return
-    tbl = pa.Table.from_batches(parts)
-    if tbl.num_rows == 0:
-        return
-    dict_arr = pc.dictionary_encode(tbl.column("term").combine_chunks())
-    terms_codes = dict_arr.indices.to_numpy()
-    terms_uniq = dict_arr.dictionary.to_pylist()
-    salts = tbl.column("salt").to_numpy()
-    docs = tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
-    tfs = tbl.column("tf").to_numpy().astype(np.int64, copy=False)
-    dls = tbl.column("doclen").to_numpy().astype(np.float64)
-    tfn = tfs / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * (dls / avgdl)))
-
-    order = np.lexsort((docs, salts, terms_codes))
-    tc, sa, docs, tfs, tfn = (
-        terms_codes[order], salts[order], docs[order], tfs[order], tfn[order]
-    )
-    change = np.empty(tc.size, dtype=bool)
-    change[0] = True
-    change[1:] = (tc[1:] != tc[:-1]) | (sa[1:] != sa[:-1])
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], tc.size)
-    encs = codec.encode_postings_grouped(
-        starts, ends, docs, tfs, tfn, block_size=block_size
-    )
-    cols: dict[str, list] = {c: [] for c in _PARTIAL_COLS}
-    for s, enc in zip(starts, encs):
-        cols["term"].append(terms_uniq[tc[s]])
-        cols["salt"].append(int(sa[s]))
-        cols["df"].append(enc.count)
-        cols["first_doc"].append(enc.first_doc)
-        cols["doc_blob"].append(enc.doc_blob)
-        cols["tf_blob"].append(enc.tf_blob)
-        cols["block_n"].append(enc.block_n)
-        cols["block_last_doc"].append(enc.block_last_doc)
-        cols["block_doc_bytes"].append(enc.block_doc_bytes)
-        cols["block_tf_bytes"].append(enc.block_tf_bytes)
-        cols["block_max_tfnorm"].append(enc.block_max_tfnorm)
-        cols["n_parts"].append(1)
-        cols["bytes_written"].append(len(enc.doc_blob) + len(enc.tf_blob))
-    yield pa.RecordBatch.from_arrays(
-        [
-            pa.array(cols["term"], type=pa.string()),
-            pa.array(cols["salt"], type=pa.int32()),
-            pa.array(cols["df"], type=pa.int64()),
-            pa.array(cols["first_doc"], type=pa.int64()),
-            pa.array(cols["doc_blob"], type=pa.binary()),
-            pa.array(cols["tf_blob"], type=pa.binary()),
-            pa.array(cols["block_n"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_last_doc"], type=pa.list_(pa.int64())),
-            pa.array(cols["block_doc_bytes"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_tf_bytes"], type=pa.list_(pa.int32())),
-            pa.array(cols["block_max_tfnorm"], type=pa.list_(pa.float64())),
-            pa.array(cols["n_parts"], type=pa.int32()),
-            pa.array(cols["bytes_written"], type=pa.int64()),
-        ],
-        _PARTIAL_COLS,
-    )
-
-
-def _encode_partition(batches, avgdl: float, block_size: int):
-    """mapInPandas kernel: encode every (term, salt) group in the
-    partition. One Arrow round-trip per partition; the group loop is
-    numpy slicing over lexsorted arrays (per-group cost ~µs, vs ~ms
-    for per-group applyInPandas dispatch)."""
-    parts = list(batches)
-    if not parts:  # empty shuffle partition (partitions > groups)
-        return
-    pdf = pd.concat(parts, ignore_index=True)
-    if pdf.empty:
-        return
-    terms_codes, terms_uniq = pd.factorize(pdf["term"], sort=False)
-    salts = pdf["salt"].to_numpy()
-    docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    dls = pdf["doclen"].to_numpy(dtype=np.float64)
-    tfn = tfs / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * (dls / avgdl)))
-    with_pos = "pos" in pdf.columns
-
-    order = np.lexsort((docs, salts, terms_codes))
-    tc, sa, docs, tfs, tfn = (
-        terms_codes[order], salts[order], docs[order], tfs[order], tfn[order]
-    )
-    flat_pos = p_off = None
+    order, starts = _sort_groups(terms_codes, salts, docs)
+    ends = np.append(starts[1:], order.size)
+    with_pos = "positions_blob" in tbl.column_names
     if with_pos:
-        # one flat concatenation in row order; group slices via cumsum
-        pos_lists = pdf["pos"].to_numpy()[order]
-        flat_pos = (
-            np.concatenate([np.asarray(x, dtype=np.int64) for x in pos_lists])
-            if len(pos_lists)
-            else np.empty(0, dtype=np.int64)
+        pos, _ = _fixed_from_binary(
+            tbl.column("positions_blob").combine_chunks(), np.int32, 4
         )
-        p_off = np.zeros(tfs.size + 1, dtype=np.int64)
-        np.cumsum(tfs, out=p_off[1:])
-    # group boundaries where (term, salt) changes
-    change = np.empty(tc.size, dtype=bool)
-    change[0] = True
-    change[1:] = (tc[1:] != tc[:-1]) | (sa[1:] != sa[:-1])
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], tc.size)
-
-    rows = []
+        if pos.size != int(tfs.sum()):
+            raise ValueError("packed positions must hold tf values per posting")
+        pos, p_off = _ragged_take(pos, tfs, order)
+    tc, sa = terms_codes[order], salts[order]
+    docs, tfs, tfn = docs[order], tfs[order], tfn[order]
     if with_pos:
-        for s, e in zip(starts, ends):
-            enc = codec.encode_postings(
+        encs = [
+            codec.encode_postings(
                 docs[s:e], tfs[s:e], tfn[s:e], block_size=block_size,
-                positions=flat_pos[p_off[s] : p_off[e]],
+                positions=pos[p_off[s] : p_off[e]],
             )
-            row = _enc_to_row(str(terms_uniq[tc[s]]), enc, 1, with_pos=True)
-            row["salt"] = int(sa[s])
-            rows.append(row)
+            for s, e in zip(starts, ends)
+        ]
     else:
-        # one vectorized pass over the whole partition (byte-identical
-        # to per-group encode_postings; per-group overhead dominated)
         encs = codec.encode_postings_grouped(
             starts, ends, docs, tfs, tfn, block_size=block_size
         )
-        for s, enc in zip(starts, encs):
-            row = _enc_to_row(str(terms_uniq[tc[s]]), enc, 1, with_pos=False)
-            row["salt"] = int(sa[s])
-            rows.append(row)
-    yield pd.DataFrame(rows, columns=_PARTIAL_COLS_POS if with_pos else _PARTIAL_COLS)
+    yield _partial_batch(starts, encs, tc, sa, terms_uniq, with_pos)
+
+
+def _partial_batch(starts, encs, tc, sa, terms_uniq, with_pos: bool):
+    import pyarrow as pa
+
+    names = _PARTIAL_COLS + (["pos_blob", "block_pos_bytes"] if with_pos else [])
+    cols: dict[str, list] = {c: [] for c in names}
+    for s, enc in zip(starts, encs):
+        cols["term"].append(terms_uniq[tc[s]])
+        cols["salt"].append(int(sa[s]))
+        cols["df"].append(enc.count)
+        cols["first_doc"].append(enc.first_doc)
+        cols["doc_blob"].append(enc.doc_blob)
+        cols["tf_blob"].append(enc.tf_blob)
+        cols["block_n"].append(enc.block_n)
+        cols["block_last_doc"].append(enc.block_last_doc)
+        cols["block_doc_bytes"].append(enc.block_doc_bytes)
+        cols["block_tf_bytes"].append(enc.block_tf_bytes)
+        cols["block_max_tfnorm"].append(enc.block_max_tfnorm)
+        cols["n_parts"].append(1)
+        cols["bytes_written"].append(
+            len(enc.doc_blob) + len(enc.tf_blob) + len(enc.pos_blob)
+        )
+        if with_pos:
+            cols["pos_blob"].append(enc.pos_blob)
+            cols["block_pos_bytes"].append(enc.block_pos_bytes)
+    types = {
+        "term": pa.string(), "salt": pa.int32(), "df": pa.int64(),
+        "first_doc": pa.int64(), "doc_blob": pa.binary(),
+        "tf_blob": pa.binary(), "block_n": pa.list_(pa.int32()),
+        "block_last_doc": pa.list_(pa.int64()),
+        "block_doc_bytes": pa.list_(pa.int32()),
+        "block_tf_bytes": pa.list_(pa.int32()),
+        "block_max_tfnorm": pa.list_(pa.float64()),
+        "n_parts": pa.int32(), "bytes_written": pa.int64(),
+        "pos_blob": pa.binary(), "block_pos_bytes": pa.list_(pa.int32()),
+    }
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[c], type=types[c]) for c in names], names
+    )
+
+
+def _estimate_head_map(fwd: DataFrame, n_docs: int, target: int) -> dict:
+    """Head terms -> n_salts, from a doc SAMPLE: salting only needs df
+    *estimates* (any salt layout merges correctly), sampling keeps this
+    scan ~constant-cost as the corpus grows, and map-side combine makes
+    the agg itself skew-immune. Tiny by construction (terms with
+    df > target), so it is collected and applied inside the pack
+    kernel — no broadcast salt join."""
+    frac = min(1.0, 100_000 / max(n_docs, 1))
+    sampled = fwd.sample(fraction=frac, seed=42) if frac < 1.0 else fwd
+    head = (
+        sampled.select(F.explode("terms").alias("t"))
+        .groupBy(F.col("t.term").alias("term"))
+        .agg((F.count("*") / F.lit(frac)).alias("df_est"))
+        .filter(F.col("df_est") > target)
+        .select(
+            "term", F.ceil(F.col("df_est") / target).cast("int").alias("n_salts")
+        )
+    )
+    return {r["term"]: int(r["n_salts"]) for r in head.collect()}
+
+
+def _pack_postings(spark: SparkSession, fwd: DataFrame, *, avgdl: float,
+                   n_docs: int, head_map: dict | None = None,
+                   term_buckets: int = 1, shard_rng: int | None = None,
+                   doc_base: int = 0) -> DataFrame:
+    """Forward rows -> packed (term, salt, term_bucket) blob rows (see
+    _pack_forward_arrow); positions ride along when the forward rows
+    carry them. Coalesced to the session parallelism: packing collapses
+    a partition's postings to (term, salt) groups, so FEWER, larger
+    pack tasks raise postings-per-blob toward |partition| / |vocab|
+    while still feeding every core."""
+    with_pos = "pos" in fwd.schema["terms"].dataType.elementType.fieldNames()
+    par = max(1, spark.sparkContext.defaultParallelism)
+    return fwd.select("doc_id", "doclen", "terms").coalesce(par).mapInArrow(
+        lambda it: _pack_forward_arrow(
+            it, avgdl=avgdl, n_docs=n_docs, head_map=head_map or {},
+            term_buckets=term_buckets, shard_rng=shard_rng, doc_base=doc_base,
+        ),
+        schema=_PACK_SCHEMA_POS if with_pos else _PACK_SCHEMA,
+    )
+
+
+def _encode_packed(packed: DataFrame, block_size: int) -> DataFrame:
+    """The (term, salt) shuffle of packed blob rows, then PARTITION-wise
+    encode: one partial row per (term, salt) group. The exchange moves
+    ~20 B/posting blobs in a handful of rows per term, never a row per
+    posting."""
+    with_pos = "positions_blob" in packed.columns
+    shuffle_n = int(packed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return packed.repartition(shuffle_n, "term", "salt").mapInArrow(
+        lambda it: _encode_packed_arrow(it, block_size=block_size),
+        schema=PARTIAL_SCHEMA_POS if with_pos else PARTIAL_SCHEMA,
+    )
 
 
 def _merge_partition(batches, term_buckets: int):
@@ -626,8 +542,8 @@ def _term_bucket_py(term: str, buckets: int) -> int:
 
 
 def _url_bucket_expr(buckets: int):
-    """JVM twin of _term_bucket_py applied to url (equality tested for
-    the term variant; same expression shape)."""
+    """JVM twin of _term_bucket_py applied to url: first 8 bytes of
+    sha256, big-endian, mod buckets."""
     return F.pmod(
         F.conv(F.substring(F.sha2(F.col("url"), 256), 1, 16), 16, 10).cast(
             "decimal(25,0)"
@@ -848,73 +764,15 @@ def build_index(
                 ]
                 done_buckets = {int(x) for x in sel["partition_id"]}
         fwd = spark.read.parquet(forward_dir)
-        # JVM-side twin of _term_bucket_py (equality is tested):
-        # first 8 bytes of sha256(term), big-endian, mod buckets
-        bucket_expr = F.pmod(
-            F.conv(F.substring(F.sha2(F.col("term"), 256), 1, 16), 16, 10).cast(
-                "decimal(25,0)"
-            ),
-            F.lit(term_buckets),
-        ).cast("int")
-        postings = fwd.select(
-            "doc_id", "doclen", F.explode("terms").alias("t")
-        ).select(
-            F.col("t.term").alias("term"),
-            "doc_id",
-            F.col("t.tf").alias("tf"),
-            "doclen",
-            *([F.col("t.pos").alias("pos")] if with_positions else []),
-        ).withColumn("term_bucket", bucket_expr)
-        # head-term detection from a doc SAMPLE: salting only needs df
-        # *estimates* (any salt layout merges correctly); sampling keeps
-        # this scan ~constant-cost as the corpus grows. Map-side combine
-        # makes the agg itself skew-immune.
-        frac = min(1.0, 100_000 / max(n_docs, 1))
-        sampled = fwd.sample(fraction=frac, seed=42) if frac < 1.0 else fwd
-        df_est = (
-            sampled.select(F.explode("terms").alias("t"))
-            .groupBy(F.col("t.term").alias("term"))
-            .agg((F.count("*") / F.lit(frac)).alias("df_est"))
+        head_map = _estimate_head_map(fwd, n_docs, target_postings_per_salt)
+        _tick("head-term df sample")
+        # packed (term, salt) blob rows straight off the forward table's
+        # nested rows (positions included when indexed): no explode, no
+        # per-posting Arrow conversion, no broadcast salt join
+        src_all = _pack_postings(
+            spark, fwd, avgdl=avgdl, n_docs=n_docs, head_map=head_map,
+            term_buckets=term_buckets,
         )
-        head = df_est.filter(F.col("df_est") > target_postings_per_salt).select(
-            "term",
-            F.ceil(F.col("df_est") / target_postings_per_salt).cast("int").alias("n_salts"),
-        )
-        _tick("df sample plan")
-        if with_positions:
-            range_per_salt = F.ceil(F.lit(n_docs) / F.col("n_salts"))
-            src_all = (
-                postings.join(F.broadcast(head), "term", "left")
-                .withColumn("n_salts", F.coalesce(F.col("n_salts"), F.lit(1)))
-                .withColumn(
-                    "salt",
-                    F.when(F.col("n_salts") == 1, F.lit(0)).otherwise(
-                        (F.col("doc_id") / range_per_salt).cast("int")
-                    ),
-                )
-                .drop("n_salts")
-            )
-        else:
-            # r6: the head map is tiny by construction (terms with
-            # df > target_postings_per_salt); collect it and pack the
-            # postings straight off the forward table's nested rows —
-            # no explode, no per-posting Arrow conversion, no
-            # broadcast salt join (see _pack_forward_arrow)
-            head_map = {r["term"]: int(r["n_salts"]) for r in head.collect()}
-            _tick("head collect")
-            # coalesce to the session parallelism: packing collapses a
-            # partition's postings to (term, salt) groups, so FEWER,
-            # larger pack tasks raise postings-per-blob toward
-            # |partition| / |vocab| (guide §2.2: fewer larger map
-            # tasks) while still feeding every core
-            par = max(1, spark.sparkContext.defaultParallelism)
-            src_all = fwd.select("doc_id", "doclen", "terms").coalesce(par).mapInArrow(
-                lambda it: _pack_forward_arrow(
-                    it, avgdl=avgdl, n_docs=n_docs,
-                    head_map=head_map, term_buckets=term_buckets,
-                ),
-                schema=_PACKED_SCHEMA_B,
-            )
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # buckets still to build, split into checkpoint groups: each
         # group is one Spark job committed with dynamic partition
@@ -932,12 +790,11 @@ def build_index(
             todo[g::checkpoint_groups] for g in range(min(checkpoint_groups, max(len(todo), 1)))
         ]
         groups = [g for g in groups if g]
-        # with >1 checkpoint group, stage the salted/packed postings
-        # ONCE (partitioned by group) so each group's job reads only
-        # its pruned slice — re-running the tokenized scan per group
-        # would multiply the heaviest pass by the group count (the
-        # packed form additionally stages ~20 B/posting blobs, not
-        # per-posting rows)
+        # with >1 checkpoint group, stage the packed postings ONCE
+        # (partitioned by group) so each group's job reads only its
+        # pruned slice — re-running the tokenized scan per group would
+        # multiply the heaviest pass by the group count (the staged
+        # form is ~20 B/posting blobs, not per-posting rows)
         staged_dir = os.path.join(out_dir, "_staged_postings")
         if len(groups) > 1:
             group_of = {b: gi for gi, bs in enumerate(groups) for b in bs}
@@ -949,7 +806,7 @@ def build_index(
                 .partitionBy("ckpt_group")
                 .parquet(staged_dir)
             )
-            _tick("stage salted postings")
+            _tick("stage packed postings")
         prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
@@ -962,33 +819,7 @@ def build_index(
                     sub = src_all.filter(F.col("term_bucket").isin(bucket_group))
                 else:
                     sub = src_all
-                sub = sub.drop("term_bucket")
-                # the (term, salt) repartition, then PARTITION-wise
-                # encode (one Python/Arrow call per partition, numpy
-                # group loop inside — per-group applyInPandas dispatch
-                # would dominate with Zipfian vocabularies). The
-                # non-positional path shuffles PACKED blob rows
-                # (~20 B/posting, a handful of rows per term) produced
-                # straight off the forward scan — per-posting rows
-                # never exist anywhere in the pipeline (r6).
-                if with_positions:
-                    partials = sub.repartition(
-                        shuffle_n, "term", "salt"
-                    ).mapInPandas(
-                        lambda it: _encode_partition(
-                            it, avgdl=avgdl, block_size=block_size
-                        ),
-                        schema=PARTIAL_SCHEMA_POS,
-                    )
-                else:
-                    partials = sub.repartition(
-                        shuffle_n, "term", "salt"
-                    ).mapInArrow(
-                        lambda it: _encode_packed_arrow(
-                            it, block_size=block_size
-                        ),
-                        schema=PARTIAL_SCHEMA,
-                    )
+                partials = _encode_packed(sub.drop("term_bucket"), block_size)
                 # merge shuffle moves only compressed blobs (the point
                 # of salting-then-encoding); blocks concat directly
                 segments = partials.repartition(shuffle_n, "term").mapInPandas(

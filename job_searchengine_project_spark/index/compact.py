@@ -69,84 +69,89 @@ def _compact_partition(batches, *, block_size: int, avgdl: float,
                        fingerprint: str = "", deleted=None):
     dl = None
     dele = deleted if deleted is not None else np.empty(0, dtype=np.int64)
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        rows = []
-        # fold generations: a term's rows (all colocated — input is
-        # repartitioned by term) merge ordered by first_doc
-        pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-        for term, grp in pdf.groupby("term", sort=False):
-            tuples = list(grp.itertuples())
-            df_tot = sum(int(r.df) for r in tuples)
-            n_blocks = sum(len(r.block_n) for r in tuples)
-            ideal = -(-df_tot // block_size)  # ceil
-            needs = len(tuples) > 1 or n_blocks > ideal
-            enc_in = None
-            docs = tfs = None
-            if not needs and dele.size:
-                # purge pre-check without re-encoding cost: tombstone
-                # ids inside the term's doc range, then an exact test
-                lo = int(tuples[0].first_doc)
-                hi = int(tuples[-1].block_last_doc[-1])
-                j0, j1 = np.searchsorted(dele, [lo, hi + 1])
-                if j1 > j0:
-                    enc_in = _enc_from_tuple(tuples[0])
-                    docs, tfs = codec.decode_postings(enc_in)
-                    needs = bool(np.isin(dele[j0:j1], docs).any())
-            if needs:
-                if dl is None:
-                    dl = _load_norms_dense(index_dir, n_docs, fingerprint or None)
-                if enc_in is None:
-                    enc_in = (
-                        _enc_from_tuple(tuples[0])
-                        if len(tuples) == 1
-                        else codec.concat_encoded([_enc_from_tuple(r) for r in tuples])
-                    )
-                    docs, tfs = codec.decode_postings(enc_in)
-                pos = (
-                    codec.decode_positions(enc_in, tfs)
-                    if enc_in.has_positions
-                    else None
+    # fold generations over the WHOLE partition: a term's rows are all
+    # colocated (input is repartitioned by term) but may straddle Arrow
+    # batches, and folding per batch would leave overlapping rows
+    parts = [pdf for pdf in batches if not pdf.empty]
+    if not parts:
+        return
+    pdf = pd.concat(parts, ignore_index=True).sort_values(
+        ["term", "first_doc"], kind="stable"
+    )
+    rows = []
+    for term, grp in pdf.groupby("term", sort=False):
+        tuples = list(grp.itertuples())
+        df_tot = sum(int(r.df) for r in tuples)
+        n_blocks = sum(len(r.block_n) for r in tuples)
+        ideal = -(-df_tot // block_size)  # ceil
+        needs = len(tuples) > 1 or n_blocks > ideal
+        enc_in = None
+        docs = tfs = None
+        if not needs and dele.size:
+            # purge pre-check without re-encoding cost: tombstone
+            # ids inside the term's doc range, then an exact test
+            lo = int(tuples[0].first_doc)
+            hi = int(tuples[-1].block_last_doc[-1])
+            j0, j1 = np.searchsorted(dele, [lo, hi + 1])
+            if j1 > j0:
+                enc_in = _enc_from_tuple(tuples[0])
+                docs, tfs = codec.decode_postings(enc_in)
+                needs = bool(np.isin(dele[j0:j1], docs).any())
+        if needs:
+            if dl is None:
+                dl = _load_norms_dense(index_dir, n_docs, fingerprint or None)
+            if enc_in is None:
+                enc_in = (
+                    _enc_from_tuple(tuples[0])
+                    if len(tuples) == 1
+                    else codec.concat_encoded([_enc_from_tuple(r) for r in tuples])
                 )
-                if dele.size:
-                    # physically drop tombstoned postings (and their
-                    # position slices — posting i owns tfs[i] values)
-                    live = ~np.isin(docs, dele)
-                    if not live.all():
-                        if pos is not None:
-                            pos = pos[np.repeat(live, tfs)]
-                        docs, tfs = docs[live], tfs[live]
-                if docs.size == 0:
-                    continue  # every posting was tombstoned: drop the term
-                tff = tfs.astype(np.float64)
-                tfn = tff / (
-                    tff + BM25_K1 * (1.0 - BM25_B + BM25_B * (dl[docs] / avgdl))
-                )
-                enc = codec.encode_postings(
-                    docs, tfs, tfn, block_size=block_size, positions=pos
-                )
-                row = _enc_to_row(str(term), enc, 1, with_pos=with_pos)
-            else:
-                r = tuples[0]
-                row = {
-                    "term": str(term), "df": int(r.df), "first_doc": int(r.first_doc),
-                    "doc_blob": bytes(r.doc_blob), "tf_blob": bytes(r.tf_blob),
-                    "block_n": list(r.block_n),
-                    "block_last_doc": list(r.block_last_doc),
-                    "block_doc_bytes": list(r.block_doc_bytes),
-                    "block_tf_bytes": list(r.block_tf_bytes),
-                    "block_max_tfnorm": list(r.block_max_tfnorm),
-                    "n_parts": int(r.n_parts),
-                    "bytes_written": int(r.bytes_written),
-                }
-                if with_pos:
-                    row["pos_blob"] = bytes(getattr(r, "pos_blob", b"") or b"")
-                    row["block_pos_bytes"] = list(
-                        getattr(r, "block_pos_bytes", []) or []
-                    )
-            row["term_bucket"] = int(tuples[0].term_bucket)
-            rows.append(row)
+                docs, tfs = codec.decode_postings(enc_in)
+            pos = (
+                codec.decode_positions(enc_in, tfs)
+                if enc_in.has_positions
+                else None
+            )
+            if dele.size:
+                # physically drop tombstoned postings (and their
+                # position slices — posting i owns tfs[i] values)
+                live = ~np.isin(docs, dele)
+                if not live.all():
+                    if pos is not None:
+                        pos = pos[np.repeat(live, tfs)]
+                    docs, tfs = docs[live], tfs[live]
+            if docs.size == 0:
+                continue  # every posting was tombstoned: drop the term
+            tff = tfs.astype(np.float64)
+            tfn = tff / (
+                tff + BM25_K1 * (1.0 - BM25_B + BM25_B * (dl[docs] / avgdl))
+            )
+            enc = codec.encode_postings(
+                docs, tfs, tfn, block_size=block_size, positions=pos
+            )
+            row = _enc_to_row(str(term), enc, 1, with_pos=with_pos)
+        else:
+            r = tuples[0]
+            row = {
+                "term": str(term), "df": int(r.df), "first_doc": int(r.first_doc),
+                "doc_blob": bytes(r.doc_blob), "tf_blob": bytes(r.tf_blob),
+                "block_n": list(r.block_n),
+                "block_last_doc": list(r.block_last_doc),
+                "block_doc_bytes": list(r.block_doc_bytes),
+                "block_tf_bytes": list(r.block_tf_bytes),
+                "block_max_tfnorm": list(r.block_max_tfnorm),
+                "n_parts": int(r.n_parts),
+                "bytes_written": int(r.bytes_written),
+            }
+            if with_pos:
+                # block_pos_bytes arrives as a numpy array: test None,
+                # never its truth value
+                bpb = getattr(r, "block_pos_bytes", None)
+                row["pos_blob"] = bytes(getattr(r, "pos_blob", b"") or b"")
+                row["block_pos_bytes"] = [] if bpb is None else list(bpb)
+        row["term_bucket"] = int(tuples[0].term_bucket)
+        rows.append(row)
+    if rows:
         yield pd.DataFrame(rows)
 
 

@@ -355,3 +355,39 @@ def test_match_phrase_prefix_and_analyze(spark, slop_index):
         {"token": "gap1", "position": 1},
         {"token": "beta", "position": 2},  # 'x' too short: dropped
     ]
+
+
+def test_positional_purge_keeps_phrase_results(spark, tmp_path):
+    """A purging compaction of a positional index re-encodes the
+    tombstoned terms with their positions and passes every other row
+    through with its position block table intact (a numpy array — its
+    truth value once crashed the passthrough): phrase matches are the
+    same before and after the purge (scores move: the purge makes df
+    and N live-only)."""
+    from job_searchengine_project_spark.index.compact import compact_index
+    from job_searchengine_project_spark.index.tombstone import delete_docs
+
+    rows = [
+        (f"u{i}", ("gamma delta" if i % 2 == 0 else "delta gamma") + f" filler{i} spark")
+        for i in range(10)
+    ] + [(f"u{i}", f"delta epsilon filler{i} spark") for i in range(10, 20)]
+    pages = spark.createDataFrame(rows, "url string, text string")
+    out = str(tmp_path / "idx_pos_purge")
+    build_index(
+        spark, pages, out, block_size=4, term_buckets=4, with_positions=True,
+    )
+    seg = spark.read.parquet(out + "/segments")
+    assert [len(r["block_n"]) for r in seg.filter("term = 'gamma'").collect()] == [3]
+    delete_docs(spark, out, ["u3"])
+
+    def phrases():
+        eng = SearchEngine(out)
+        return {
+            q: sorted((h.doc_id, h.url) for h in eng.search_phrase(q, k=20))
+            for q in ("gamma delta", "delta gamma", "epsilon filler12")
+        }
+
+    before = phrases()
+    assert sorted(u for _, u in before["delta gamma"]) == ["u1", "u5", "u7", "u9"]
+    assert compact_index(spark, out)["purged_docs"] == 1
+    assert phrases() == before

@@ -498,3 +498,39 @@ def test_msearch_batch_and_mget(spark, morph_index):
         if d["found"]:
             assert d["_source"] == single["_source"]
     assert not resp["docs"][1]["found"]
+
+
+def test_sharded_layout_one_row_per_term_shard(spark, tmp_path):
+    """The per-shard kernels (match_docs_sharded and friends) read ONE
+    row per (term, shard): the derive must never split a group across
+    rows, positional or not — even when the encode kernel receives its
+    shuffle partition in tiny Arrow batches."""
+    import pyarrow.dataset as pads
+
+    from job_searchengine_project_spark.index.sharded import build_sharded_segments
+
+    pages = spark.createDataFrame(
+        [
+            (f"https://s.test/{i}", f"alpha beta w{i % 5} w{i % 3} gamma{i % 2}")
+            for i in range(60)
+        ],
+        "url string, text string",
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    for with_pos in (False, True):
+        out = str(tmp_path / f"idx_pos{int(with_pos)}")
+        build_index(spark, pages, out, term_buckets=4, with_positions=with_pos,
+                    store_fields=False)
+        spark.conf.set(key, "2")
+        try:
+            build_sharded_segments(spark, out, n_shards=4)
+        finally:
+            spark.conf.set(key, prev)
+        ds = pads.dataset(os.path.join(out, "shards"), format="parquet",
+                          partitioning="hive")
+        assert ("pos_blob" in ds.schema.names) == with_pos
+        tbl = ds.to_table(columns=["term", "shard"])
+        keys = list(zip(tbl.column("term").to_pylist(), tbl.column("shard").to_pylist()))
+        assert len(keys) == len(set(keys))
+        assert {s for t, s in keys if t == "alpha"} == {0, 1, 2, 3}

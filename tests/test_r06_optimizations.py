@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -176,92 +177,145 @@ def test_fields_of_many_matches_fields_of(spark, tmp_path):
         assert batched[d] == eng.fields_of(d)
 
 
-def test_packed_shuffle_partials_identical(spark):
-    """The packed-blob encode path (pack map-side -> blob shuffle ->
-    _encode_packed_arrow) must emit exactly the partial rows of the
-    per-posting-row kernel — same (term, salt) groups, same encoded
-    blobs, byte for byte."""
-    from pyspark.sql import functions as F
+def _reference_partials(rows, avgdl, bs):
+    """Reference encode: plain codec.encode_postings per (term, salt)
+    group of collected exploded posting rows (positions included when
+    the rows carry them), docs ascending within the group."""
+    from job_searchengine_project_spark import BM25_B, BM25_K1
+    from job_searchengine_project_spark.index import codec
 
+    groups = {}
+    for r in rows:
+        groups.setdefault((r["term"], r["salt"]), []).append(r)
+    out = {}
+    for k, grp in groups.items():
+        grp.sort(key=lambda r: r["doc_id"])
+        docs = np.array([r["doc_id"] for r in grp], dtype=np.int64)
+        tfs = np.array([r["tf"] for r in grp], dtype=np.int64)
+        dls = np.array([r["doclen"] for r in grp], dtype=np.float64)
+        tfn = tfs / (tfs + BM25_K1 * (1.0 - BM25_B + BM25_B * (dls / avgdl)))
+        pos = (
+            np.concatenate([np.asarray(r["pos"], dtype=np.int64) for r in grp])
+            if "pos" in grp[0]
+            else None
+        )
+        enc = codec.encode_postings(docs, tfs, tfn, block_size=bs, positions=pos)
+        out[k] = _partial_key(
+            {
+                "df": enc.count, "first_doc": enc.first_doc,
+                "doc_blob": enc.doc_blob, "tf_blob": enc.tf_blob,
+                "block_n": enc.block_n, "block_last_doc": enc.block_last_doc,
+                "block_doc_bytes": enc.block_doc_bytes,
+                "block_tf_bytes": enc.block_tf_bytes,
+                "block_max_tfnorm": enc.block_max_tfnorm,
+                "bytes_written": (
+                    len(enc.doc_blob) + len(enc.tf_blob) + len(enc.pos_blob)
+                ),
+                **(
+                    {"pos_blob": enc.pos_blob,
+                     "block_pos_bytes": enc.block_pos_bytes}
+                    if pos is not None
+                    else {}
+                ),
+            }
+        )
+    return out
+
+
+def _partial_key(r):
+    keys = ("df", "first_doc", "bytes_written")
+    blobs = ("doc_blob", "tf_blob", "pos_blob")
+    lists = (
+        "block_n", "block_last_doc", "block_doc_bytes", "block_tf_bytes",
+        "block_max_tfnorm", "block_pos_bytes",
+    )
+    return (
+        tuple(int(r[c]) for c in keys)
+        + tuple(None if r.get(c) is None else bytes(r[c]) for c in blobs)
+        + tuple(None if r.get(c) is None else tuple(r[c]) for c in lists)
+    )
+
+
+def _exploded(fwd, with_positions):
+    return fwd.select("doc_id", "doclen", F.explode("terms").alias("t")).select(
+        F.col("t.term").alias("term"), "doc_id",
+        F.col("t.tf").alias("tf"), "doclen",
+        *([F.col("t.pos").alias("pos")] if with_positions else []),
+    )
+
+
+def test_packed_shuffle_partials_identical(spark):
+    """The packed encode path (pack off the forward rows -> (term,
+    salt) blob shuffle -> _encode_packed_arrow) must emit exactly the
+    partial rows of plain per-group codec.encode_postings over the
+    exploded postings — same (term, salt) groups, same encoded blobs
+    (positions included), byte for byte. Every term splits into three
+    doc-range salts, like the sharded derive and head-term splits."""
+    for with_positions in (False, True):
+        _check_packed_shuffle_partials(spark, with_positions)
+
+
+def _check_packed_shuffle_partials(spark, with_positions):
     from job_searchengine_project_spark.corpus import generate_webpages
     from job_searchengine_project_spark.index.build import (
-        _PACKED_SCHEMA,
-        PARTIAL_SCHEMA,
-        _encode_packed_arrow,
-        _encode_partition_arrow,
-        _pack_partition_arrow,
+        _encode_packed,
+        _pack_postings,
     )
     from job_searchengine_project_spark.index.prepare import prepare_docs
 
     pages = generate_webpages(spark, n_docs=500, vocab_size=400, seed=13)
-    fwd = prepare_docs(pages)
-    postings = (
-        fwd.select("doc_id", "doclen", F.explode("terms").alias("t"))
-        .select(
-            F.col("t.term").alias("term"), "doc_id",
-            F.col("t.tf").alias("tf"), "doclen",
-        )
-        # synthetic salts incl. multi-salt terms, like head-term splits
-        .withColumn("salt", (F.col("doc_id") % 3).cast("int"))
-    )
+    fwd = prepare_docs(pages, with_positions=with_positions).localCheckpoint()
+    n_docs = fwd.count()
+    rng = -(-n_docs // 3)
     avgdl, bs = 37.5, 32
-    old = (
-        postings.repartition(8, "term", "salt")
-        .mapInArrow(
-            lambda it: _encode_partition_arrow(it, avgdl=avgdl, block_size=bs),
-            schema=PARTIAL_SCHEMA,
-        )
-        .collect()
+    ref = _reference_partials(
+        _exploded(fwd, with_positions)
+        .withColumn("salt", (F.col("doc_id") / F.lit(rng)).cast("int"))
+        .collect(),
+        avgdl, bs,
     )
-    new = (
-        postings.mapInArrow(
-            lambda it: _pack_partition_arrow(it, avgdl=avgdl),
-            schema=_PACKED_SCHEMA,
-        )
-        .repartition(8, "term", "salt")
-        .mapInArrow(
-            lambda it: _encode_packed_arrow(it, block_size=bs),
-            schema=PARTIAL_SCHEMA,
-        )
-        .collect()
-    )
-
-    def key(rows):
-        return {
-            (r["term"], r["salt"]): (
-                r["df"], r["first_doc"], bytes(r["doc_blob"]),
-                bytes(r["tf_blob"]), tuple(r["block_n"]),
-                tuple(r["block_last_doc"]), tuple(r["block_doc_bytes"]),
-                tuple(r["block_tf_bytes"]), tuple(r["block_max_tfnorm"]),
-            )
-            for r in rows
-        }
-
-    ko, kn = key(old), key(new)
-    assert ko == kn and len(ko) == len(old) == len(new)
+    assert len({s for _, s in ref}) == 3
+    new = _encode_packed(
+        _pack_postings(
+            spark, fwd, avgdl=avgdl, n_docs=n_docs, shard_rng=rng
+        ).drop("term_bucket"),
+        bs,
+    ).collect()
+    got = {(r["term"], r["salt"]): _partial_key(r.asDict()) for r in new}
+    assert len(got) == len(new) == len(ref)
+    assert got == ref
+    assert all(r["n_parts"] == 1 for r in new)
 
 
 def test_pack_forward_matches_exploded_salted(spark):
-    """_pack_forward_arrow (forward nested rows, in-kernel salt +
-    term_bucket) must produce the same (term, salt) groups and blobs
-    as exploding + broadcast-salting + _pack_partition_arrow, and its
-    term_bucket must equal the JVM bucket_expr twin."""
-    from pyspark.sql import functions as F
+    """The pack kernel's in-kernel head-term salting — doc-range salts
+    relative to a doc-id base, as update_index uses it — must produce
+    the (term, salt) groups of the broadcast-salt JVM expression over
+    exploded postings, and those groups must encode exactly as plain
+    codec.encode_postings does. Its term_bucket must equal
+    _term_bucket_py."""
+    for with_positions in (False, True):
+        _check_pack_forward_salted(spark, with_positions)
 
+
+def _check_pack_forward_salted(spark, with_positions):
     from job_searchengine_project_spark.corpus import generate_webpages
     from job_searchengine_project_spark.index.build import (
-        _PACKED_SCHEMA,
-        _PACKED_SCHEMA_B,
-        _pack_forward_arrow,
-        _pack_partition_arrow,
+        _encode_packed,
+        _pack_postings,
         _term_bucket_py,
     )
     from job_searchengine_project_spark.index.prepare import prepare_docs
 
     pages = generate_webpages(spark, n_docs=600, vocab_size=150, seed=21)
-    fwd = prepare_docs(pages).localCheckpoint()
+    base = 1000  # a later generation's doc-id base
+    fwd = (
+        prepare_docs(pages, with_positions=with_positions)
+        .withColumn("doc_id", F.col("doc_id") + F.lit(base))
+        .localCheckpoint()
+    )
     n_docs = fwd.count()
-    avgdl = 40.0
+    avgdl, bs = 40.0, 16
     # small target so several head terms get real multi-salt splits
     target = 120
     df_true = (
@@ -276,63 +330,44 @@ def test_pack_forward_matches_exploded_salted(spark):
     head_map = {r["term"]: int(r["n_salts"]) for r in head.collect()}
     assert head_map, "fixture must exercise multi-salt head terms"
 
-    postings = fwd.select("doc_id", "doclen", F.explode("terms").alias("t")).select(
-        F.col("t.term").alias("term"), "doc_id",
-        F.col("t.tf").alias("tf"), "doclen",
-    )
     rps = F.ceil(F.lit(n_docs) / F.col("n_salts"))
     salted = (
-        postings.join(F.broadcast(head), "term", "left")
+        _exploded(fwd, with_positions)
+        .join(F.broadcast(head), "term", "left")
         .withColumn("n_salts", F.coalesce(F.col("n_salts"), F.lit(1)))
         .withColumn(
             "salt",
             F.when(F.col("n_salts") == 1, F.lit(0)).otherwise(
-                (F.col("doc_id") / rps).cast("int")
+                ((F.col("doc_id") - base) / rps).cast("int")
             ),
         )
         .drop("n_salts")
     )
-    # single partition each so both forms group over the same row sets
-    old = (
-        salted.coalesce(1)
-        .mapInArrow(
-            lambda it: _pack_partition_arrow(it, avgdl=avgdl),
-            schema=_PACKED_SCHEMA,
-        )
-        .collect()
+    ref = _reference_partials(salted.collect(), avgdl, bs)
+    assert any(s > 0 for _, s in ref)
+    packed = _pack_postings(
+        spark, fwd, avgdl=avgdl, n_docs=n_docs, head_map=head_map,
+        term_buckets=8, doc_base=base,
     )
-    new = (
-        fwd.select("doc_id", "doclen", "terms")
-        .coalesce(1)
-        .mapInArrow(
-            lambda it: _pack_forward_arrow(
-                it, avgdl=avgdl, n_docs=n_docs, head_map=head_map,
-                term_buckets=8,
-            ),
-            schema=_PACKED_SCHEMA_B,
-        )
-        .collect()
-    )
-
-    def key(rows):
-        out = {}
-        for r in rows:
-            k = (r["term"], r["salt"])
-            v = (bytes(r["docs_blob"]), bytes(r["tfs_blob"]), bytes(r["tfn_blob"]))
-            assert k not in out or out[k] == v
-            out.setdefault(k, []).append(v)
-        return out
-
-    def merge(rows):
-        # groups may split across Arrow batches: concat per (term, salt)
-        out = {}
-        for r in sorted(rows, key=lambda r: bytes(r["docs_blob"])[:8]):
-            k = (r["term"], r["salt"])
-            d, t, n = out.get(k, (b"", b"", b""))
-            out[k] = (d + bytes(r["docs_blob"]), t + bytes(r["tfs_blob"]),
-                      n + bytes(r["tfn_blob"]))
-        return out
-
-    assert merge(old) == merge(new)
-    for r in new:
+    for r in packed.select("term", "term_bucket").collect():
         assert r["term_bucket"] == _term_bucket_py(r["term"], 8)
+    new = _encode_packed(packed.drop("term_bucket"), bs).collect()
+    got = {(r["term"], r["salt"]): _partial_key(r.asDict()) for r in new}
+    assert len(got) == len(new)
+    assert got == ref
+
+
+def test_binary_from_fixed_refuses_offset_overflow():
+    """Packed blob columns carry int32 offsets: a batch whose data
+    would pass 2 GiB must fail loudly, not wrap."""
+    from job_searchengine_project_spark.index.build import _binary_from_fixed
+
+    vals = np.zeros(4, dtype=np.int64)
+    ok = _binary_from_fixed(vals, np.array([0, 2, 4], dtype=np.int64), 8)
+    assert [len(b.as_py()) for b in ok] == [16, 16]
+    with pytest.raises(ValueError, match="2 GiB"):
+        _binary_from_fixed(vals, np.array([0, 2**28], dtype=np.int64), 8)
+    with pytest.raises(ValueError, match="2 GiB"):
+        _binary_from_fixed(
+            vals.astype(np.int32), np.array([0, 1, 2**29 + 1], dtype=np.int64), 4
+        )

@@ -263,3 +263,62 @@ def test_update_purges_orphan_forward_rows(spark, webpages_small, tmp_path):
     assert fwd.count() == 130  # 100 + 30, orphans purged
     assert fwd.select("doc_id").distinct().count() == 130  # no id collisions
     assert SearchEngine(out).search(["spark"], k=3)
+
+
+def test_compaction_folds_terms_straddling_arrow_batches(spark, tmp_path):
+    """A term's generation rows all land in one compaction partition
+    but may straddle its Arrow batches; the fold must span the whole
+    partition. With 2-row batches a per-batch fold left several
+    overlapping rows per shared term."""
+    from job_searchengine_project_spark.index.compact import compact_index
+
+    out = str(tmp_path / "idx_compact_batches")
+    base = spark.createDataFrame(
+        [
+            (f"https://c.test/b{i}", f"alpha beta common filler{i % 7} " * (1 + i % 3))
+            for i in range(30)
+        ],
+        "url string, text string",
+    )
+    batches = [
+        spark.createDataFrame(
+            [
+                (f"https://c.test/g{g}u{i}", f"alpha common gen{g} beta{'' if i % 2 else ' beta'}")
+                for i in range(5)
+            ],
+            "url string, text string",
+        )
+        for g in range(4)
+    ]
+    build_index(spark, base, out, term_buckets=2, store_fields=False)
+    for b in batches:
+        update_index(spark, b, out)
+    seg = spark.read.parquet(out + "/segments")
+    assert seg.filter(F.col("term") == "alpha").count() == 5
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        compact_index(spark, out)
+    finally:
+        spark.conf.set(key, prev)
+
+    seg = spark.read.parquet(out + "/segments")
+    assert seg.groupBy("term").count().filter(F.col("count") > 1).count() == 0
+    eng = SearchEngine(out)
+    docs_all = prepare_docs(base)
+    n = 30
+    for b in batches:
+        docs_all = docs_all.unionByName(
+            prepare_docs(b).withColumn("doc_id", F.col("doc_id") + F.lit(n))
+        )
+        n += 5
+    for q in (["alpha"], ["beta", "common"], ["alpha", "beta", "common", "gen2"]):
+        hits = eng.search(q, k=10)
+        oracle = bm25_topk_oracle(
+            docs_all, q, k=10, n_docs=eng.n_docs, avgdl=eng.avgdl
+        ).collect()
+        assert [h.doc_id for h in hits] == [r["doc_id"] for r in oracle], q
+        for h, r in zip(hits, oracle):
+            assert abs(h.score - r["score"]) < 1e-9
